@@ -16,11 +16,8 @@ from __future__ import annotations
 import codecs
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
 
 _BOMS: list[tuple[bytes, str]] = [
     (codecs.BOM_UTF32_LE, "utf-32-le"),
@@ -121,12 +118,6 @@ def is_html(body: bytes | None, content_type: str | None) -> bool:
         or b"<!doctype" in low
         or (ct.startswith("text/") and b"\x00" not in snippet)
     )
-
-
-@pandas_udf(StructType([StructField("text", StringType()), StructField("encoding", StringType())]))
-def decode_body_udf(bodies: pd.Series, content_types: pd.Series) -> pd.DataFrame:
-    out = [decode_body(b, ct) for b, ct in zip(bodies, content_types)]
-    return pd.DataFrame(out, columns=["text", "encoding"])
 
 
 def is_html_col(body: str | Column, content_type: str | Column) -> Column:

@@ -100,6 +100,11 @@ def merge_params(url: str, params: dict[str, str] | None) -> str:
     )
 
 
+def has_params_col() -> Column:
+    """NULL-safe: True where the request carries non-empty ``params``."""
+    return F.coalesce(F.size(F.col("params")) > 0, F.lit(False))
+
+
 @pandas_udf(StringType())
 def merge_params_udf(urls: pd.Series, params: pd.Series) -> pd.Series:
     return pd.Series(
@@ -118,7 +123,7 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 # never crosses the Python boundary for the (overwhelmingly common)
 # already-canonical absolute http(s) URL. Anything the pattern cannot
 # PROVE canonical falls through to the pandas-UDF path — identical
-# split-filter discipline as fetch._with_fetch_url.
+# split-filter discipline as fetch.with_fetch_url.
 _CANON_FAST_SQL = r"^https?://[a-z0-9.\-]+(/[^#]*)?$"
 _NO_PATH_SQL = r"^https?://[a-z0-9.\-]+$"
 _HOST_EXTRACT_SQL = r"^https?://([a-z0-9.\-]+)"
@@ -128,14 +133,19 @@ def with_canonical_url_host(df, url_col: str = "url"):
     """``url_col`` canonicalized in place plus a ``host`` column.
 
     Value-identical to ``canonicalize_udf`` + ``host_udf`` (pinned by
-    tests/test_operators_unit.py) but JVM-side for fast-pattern URLs:
+    tests/test_optimization_r06.py) but JVM-side for fast-pattern URLs:
     a 2.4M-seed initialize() spent most of its wall in the two pandas
     UDFs re-deriving strings that were already canonical (guide §4:
     eliminate the Python boundary when a builtin expression exists).
     Row order is NOT preserved (split-filter + union); every consumer
-    orders by explicit keys."""
+    orders by explicit keys.
+
+    The UDF branch is planned only when a probe finds a row that
+    misses the fast pattern: an empty UDF branch still starts a Python
+    worker in every task of every job that reads the result."""
     u = F.col(url_col)
     is_fast = u.rlike(_CANON_FAST_SQL)
+    is_slow = ~F.coalesce(is_fast, F.lit(False))
     fast = (
         df.filter(is_fast)
         .withColumn(
@@ -144,8 +154,10 @@ def with_canonical_url_host(df, url_col: str = "url"):
         )
         .withColumn("host", F.regexp_extract(F.col(url_col), _HOST_EXTRACT_SQL, 1))
     )
+    if df.filter(is_slow).isEmpty():
+        return fast
     slow = (
-        df.filter(~F.coalesce(is_fast, F.lit(False)))
+        df.filter(is_slow)
         .withColumn(url_col, canonicalize_udf(url_col))
         .withColumn("host", host_udf(url_col))
     )

@@ -1,14 +1,16 @@
 """The fetch stage.
 
-Offline mode (tests/bench): a deterministic equi-join of the dequeued
-batch against the synthetic ``web`` table, with the redirect loop of
-the reference fetch (http.py:80-152,427-464) unrolled as a bounded
-chain of joins — follow 301/302/303/307/308 ``Location``, cap at
-``max_redirects`` (http.py:119-122), detect loops via the visited-URL
-set (http.py:128-129), count ``redirect_times`` (http.py:461-463).
-Retryable pages surface their listed status until ``retry_times``
-reaches the fixture's ``attempts_until_ok`` (emulating a server that
-fails k times then succeeds).
+Offline mode (tests/bench): the redirect loop of the reference fetch
+(http.py:80-152,427-464) is resolved ONCE per crawl over the synthetic
+``web`` table (``resolve_web``), unrolled as a bounded chain of joins
+— follow 301/302/303/307/308 ``Location``, cap at ``max_redirects``
+(http.py:119-122), detect loops via the visited-URL set
+(http.py:128-129), count ``redirect_times`` (http.py:461-463). Each
+round is then one equi-join of the dequeued batch against that table
+(``offline_fetch_resolved``). Retryable pages surface their listed
+status until ``retry_times`` reaches the fixture's
+``attempts_until_ok`` (emulating a server that fails k times then
+succeeds).
 
 Each unroll step joins only the still-redirecting tail (a few % of
 rows), so the chain costs ~1 join at scale; AQE picks broadcast for
@@ -29,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from silkworm_spark.functions.urls import has_params_col, merge_params_udf
 from silkworm_spark.schemas import FETCH_RESULT_SCHEMA
 
 REDIRECT_STATUSES = (301, 302, 303, 307, 308)
@@ -41,101 +44,27 @@ from silkworm_spark.schemas import FRONTIER_COLS
 _CARRY = [*FRONTIER_COLS, "part"]
 
 
-def _with_fetch_url(batch: DataFrame) -> DataFrame:
+def with_fetch_url(batch: DataFrame, has_params: bool) -> DataFrame:
     """Add ``_fetch``: the effective request URL with query params
     merged at FETCH time, raw ``url`` untouched (the reference merges
     in http._build_url, http.py:396-406 — the seen set and ordering
-    key stay on req.url). Split-filtered so the merge UDF stage only
-    ever sees rows that carry params — the common all-GET-no-params
-    round pays zero Python."""
-    from silkworm_spark.functions.urls import merge_params_udf
+    key stay on req.url).
 
-    if "params" not in batch.columns:
+    ``has_params`` says whether any row of ``batch`` may carry
+    non-empty ``params`` (the dequeue counts them in its aggregate,
+    ``DequeueResult.n_params``). Without such a row ``_fetch`` is a
+    plain column alias and the round plans no Python stage at all: an
+    empty UDF branch still starts a Python worker per task. With one,
+    the batch is split so ``merge_params_udf`` sees only the rows that
+    carry params."""
+    if not has_params:
         return batch.withColumn("_fetch", F.col("url"))
-    has_p = F.col("params").isNotNull() & (F.size(F.col("params")) > 0)
-    without = batch.filter(~F.coalesce(has_p, F.lit(False))).withColumn(
-        "_fetch", F.col("url")
-    )
-    with_p = batch.filter(F.coalesce(has_p, F.lit(False))).withColumn(
+    has_p = has_params_col()
+    without = batch.filter(~has_p).withColumn("_fetch", F.col("url"))
+    with_p = batch.filter(has_p).withColumn(
         "_fetch", merge_params_udf("url", "params")
     )
     return without.unionByName(with_p)
-
-
-def offline_fetch(batch: DataFrame, web: DataFrame, max_redirects: int = 10) -> DataFrame:
-    """Dequeued frontier batch → batch + fetch-result columns.
-
-    Missing URLs (no row in ``web``) become ``error='fetch_error'``
-    with NULL status, matching a network/DNS failure in the reference
-    (http.py raises, engine.py:131-137 counts an error).
-    """
-    w = web.select(
-        F.col("url").alias("w_url"), F.col("status").alias("w_status"),
-        F.col("content_type").alias("w_ct"), F.col("redirect_to").alias("w_redir"),
-        F.col("body").alias("w_body"), F.col("attempts_until_ok").alias("w_attempts"),
-    )
-
-    pending = _with_fetch_url(batch).select(
-        *_CARRY,
-        F.col("_fetch").alias("cur_url"),
-        F.array(F.col("_fetch")).alias("visited"),
-        F.lit(0).alias("redirect_times"),
-    )
-    finished: list[DataFrame] = []
-    cached: list[DataFrame] = []
-
-    for _step in range(max_redirects + 1):
-        j = pending.join(w, pending.cur_url == w.w_url, "left")
-        # a retryable page succeeds once retry_times >= attempts_until_ok
-        eff_status = F.when(F.col("w_url").isNull(), F.lit(None).cast("int")).otherwise(
-            F.when(
-                (F.col("w_attempts") > 0) & (F.col("retry_times") >= F.col("w_attempts")),
-                F.lit(200),
-            ).otherwise(F.col("w_status"))
-        )
-        j = j.withColumn("eff_status", eff_status)
-        is_redirect = (
-            F.col("eff_status").isin(*REDIRECT_STATUSES) & F.col("w_redir").isNotNull()
-        )
-        loops = is_redirect & F.array_contains(F.col("visited"), F.col("w_redir"))
-        over = F.lit(_step >= max_redirects)
-
-        done = j.filter(~is_redirect | loops | over).select(
-            *_CARRY,
-            F.col("cur_url").alias("final_url"),
-            F.col("eff_status").alias("status"),
-            F.col("w_ct").alias("content_type"),
-            F.col("w_body").alias("body"),
-            F.col("redirect_times"),
-            F.when(F.col("w_url").isNull(), F.lit("fetch_error"))
-            .when(loops, F.lit("redirect_loop"))
-            .when(is_redirect & over, F.lit("too_many_redirects"))
-            .otherwise(F.lit(None).cast("string"))
-            .alias("error"),
-            F.lit(None).cast("map<string,string>").alias("resp_headers"),
-        )
-        finished.append(done)
-
-        # cache the (tiny) redirecting tail so each unroll step is one
-        # incremental join, not a re-evaluation of the whole chain
-        pending = j.filter(is_redirect & ~loops & ~over).select(
-            *_CARRY,
-            F.col("w_redir").alias("cur_url"),
-            F.array_append(F.col("visited"), F.col("w_redir")).alias("visited"),
-            (F.col("redirect_times") + 1).alias("redirect_times"),
-        ).cache()
-        cached.append(pending)
-        if pending.isEmpty():
-            break
-
-    out = finished[0]
-    for d in finished[1:]:
-        out = out.unionByName(d)
-    out = out.cache()
-    out.count()  # materialize before releasing the unroll tails
-    for c in cached:
-        c.unpersist()
-    return out
 
 
 RESOLVED_COLS = [
@@ -210,17 +139,17 @@ def resolve_web(web: DataFrame, max_redirects: int = 10) -> DataFrame:
 
 
 def offline_fetch_missing(batch: DataFrame, resolved: DataFrame) -> DataFrame:
-    """Batch rows with no resolved row (dead links) — the keys-only
-    anti-join split out so one round can compute it ONCE and feed both
-    the parse source and the body-free metadata twin (round 5 ran this
-    2.6M-key shuffle-hash anti-join twice per round, once inside each
-    twin's plan). Returns _CARRY + ``_fetch``; usually empty. The
-    caller may cache it (the engine does, releasing after the round).
+    """Rows of the fetch-ready ``batch`` (``with_fetch_url``) with no
+    resolved row (dead links) — the keys-only anti-join split out so
+    one round can compute it ONCE and feed both the parse source and
+    the body-free metadata twin (round 5 ran this 2.6M-key shuffle-hash
+    anti-join twice per round, once inside each twin's plan). Returns
+    the batch's columns; usually empty. The caller may cache it (the
+    engine does, releasing after the round).
     """
-    b = _with_fetch_url(batch)
-    return b.join(
+    return batch.join(
         resolved.select(F.col("url").alias("r_url")).hint("SHUFFLE_HASH"),
-        b["_fetch"] == F.col("r_url"), "left_anti"
+        batch["_fetch"] == F.col("r_url"), "left_anti"
     )
 
 
@@ -232,8 +161,10 @@ def offline_fetch_resolved(
     include_body: bool = True,
     missing: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-round fetch against the precomputed resolution table: one
-    equi-join, then the retryable-status rule
+    """Per-round fetch of the fetch-ready ``batch`` (``with_fetch_url``;
+    the round builds it once and shares it with ``missing`` and both
+    twins) against the precomputed resolution table: one equi-join,
+    then the retryable-status rule
     (status=200 once retry_times >= attempts_until_ok).
 
     ``include_body=False`` builds the body-FREE metadata twin: the
@@ -259,7 +190,6 @@ def offline_fetch_resolved(
     # is a separate keys-only anti-join. The broadcast is size-GATED:
     # beyond broadcast_max_rows a multi-GB round batch would be shipped
     # to every executor, so it falls back to a shuffle-hash join.
-    batch = _with_fetch_url(batch)
     b = (
         F.broadcast(batch)
         if n_batch is None or n_batch <= broadcast_max_rows
@@ -441,8 +371,8 @@ def live_fetch(
     global rate stays budget-bounded.
 
     Redirects are driven MANUALLY (the opener's redirect handler is
-    disabled) so count/cap/loop semantics match ``offline_fetch``
-    exactly (reference http.py:80-152,427-464): follow
+    disabled) so count/cap/loop semantics match the offline path
+    (``resolve_web``) exactly (reference http.py:80-152,427-464): follow
     301/302/303/307/308 ``Location``, count ``redirect_times``, detect
     loops via the visited set (error ``redirect_loop``), stop at
     ``max_redirects`` (error ``too_many_redirects``); 301/302/303

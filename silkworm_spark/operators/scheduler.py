@@ -73,6 +73,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from silkworm_spark.functions.urls import has_params_col
+
 _INF = (1 << 31) - 1
 
 
@@ -86,11 +88,22 @@ class DequeueResult:
     n_denied: int = 0
     seq_bounds: tuple | None = None  # (min seq, max seq) of the batch
     floor_next: int = 0  # lower bound on the smallest live seq after this round
+    # upper bound on the batch rows with non-empty params (0 ⇒ none):
+    # lets the fetch keep `_fetch = url` on the JVM (fetch.with_fetch_url)
+    n_params: int = 0
     _scored: DataFrame | None = None  # internal cache handle (unpersist after round)
 
     def release(self) -> None:
         if self._scored is not None:
             self._scored.unpersist()
+
+
+def _params_flag(df: DataFrame):
+    """1 for a row with non-empty ``params``, else 0 — summed by the
+    dequeue's own aggregate into ``n_params``."""
+    if "params" not in df.columns:
+        return F.lit(0)
+    return has_params_col().cast("int")
 
 
 def _dequeue_fifo(
@@ -116,8 +129,9 @@ def _dequeue_fifo(
     while True:
         e = eligible.filter(F.col("seq") < F.lit(h_cap)) if h_cap is not None else eligible
         st = (
-            e.select("seq").orderBy("seq").limit(round_budget)
-            .agg(F.count("*").alias("n"), F.min("seq").alias("mn"), F.max("seq").alias("mx"))
+            e.select("seq", _params_flag(e).alias("_p")).orderBy("seq").limit(round_budget)
+            .agg(F.count("*").alias("n"), F.min("seq").alias("mn"), F.max("seq").alias("mx"),
+                 F.sum("_p").alias("np"))
             .first()
         )
         n_batch = int(st["n"] or 0)
@@ -159,6 +173,7 @@ def _dequeue_fifo(
         n_denied=0,
         seq_bounds=(int(st["mn"]), int(kth)) if n_batch else None,
         floor_next=floor_next,
+        n_params=int(st["np"] or 0),
         _scored=None,
     )
 
@@ -293,6 +308,8 @@ def dequeue_round(
             F.min(F.when(F.col("_sel"), F.col("seq"))).alias("mn"),
             F.max(F.when(F.col("_sel"), F.col("seq"))).alias("mx"),
             F.min(F.when(~F.col("_denied") & ~F.col("_sel"), F.col("seq"))).alias("floor_cand"),
+            # over the selection BEFORE the budget cut: an upper bound
+            F.sum(F.when(F.col("_sel"), _params_flag(scored))).alias("np"),
         ).first()
         n_denied = int(st["nd"] or 0)
         n_sel = int(st["ns"] or 0)
@@ -397,5 +414,6 @@ def dequeue_round(
         n_denied=n_denied,
         seq_bounds=(int(seq_min), int(seq_max)) if n_batch else None,
         floor_next=floor_next,
+        n_params=int(st["np"] or 0),
         _scored=scored,
     )

@@ -72,6 +72,7 @@ from silkworm_spark.operators.fetch import (
     offline_fetch_missing,
     offline_fetch_resolved,
     resolve_web,
+    with_fetch_url,
 )
 from silkworm_spark.operators.order import assign_dense_seq
 from silkworm_spark.operators.parse import run_parse_stage
@@ -489,14 +490,18 @@ class CrawlEngine:
                 # the dead-link anti-join is computed ONCE and shared
                 # by both twins (it is usually empty; r5 paid the
                 # 2.6M-key shuffle-hash join twice per round)
-                missing = offline_fetch_missing(batch, resolved).cache()
+                # one fetch-ready batch for all three: `_fetch` stays a
+                # JVM alias of `url` unless the dequeue counted a row
+                # with params (no Python stage otherwise)
+                fetch_batch = with_fetch_url(batch, dq.n_params > 0)
+                missing = offline_fetch_missing(fetch_batch, resolved).cache()
                 parse_src = offline_fetch_resolved(
-                    batch, resolved, n_batch=n_batch,
+                    fetch_batch, resolved, n_batch=n_batch,
                     broadcast_max_rows=cfg.fetch_broadcast_max_rows,
                     missing=missing,
                 )
                 meta_src = offline_fetch_resolved(
-                    batch, resolved, n_batch=n_batch,
+                    fetch_batch, resolved, n_batch=n_batch,
                     broadcast_max_rows=cfg.fetch_broadcast_max_rows,
                     include_body=False, missing=missing,
                 )

@@ -54,7 +54,9 @@ class SimResult:
 
 
 def _fetch(web: dict, url: str, retry_times: int, max_redirects: int):
-    """Mirror of operators/fetch.offline_fetch for one row."""
+    """Mirror of the offline fetch for one row: the redirect chain
+    operators/fetch.resolve_web resolves, then the retryable-status
+    rule of operators/fetch.offline_fetch_resolved."""
     cur, visited, redirects = url, {url}, 0
     for step in range(max_redirects + 1):
         page = web.get(cur)

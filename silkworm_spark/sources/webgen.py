@@ -262,9 +262,22 @@ def build_robots(n_hosts: int, seed: int = 42) -> list[dict]:
     return rows
 
 
+def _local_df(spark: SparkSession, rows: list[dict], schema) -> DataFrame:
+    """Driver-side rows as a JVM-resident frame: shipped once as Arrow
+    batches, so no job that reads it starts a Python worker (a
+    ``createDataFrame`` over a Python list is an RDD that every job
+    re-runs through Python)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema
+    )
+
+
 def seeds_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    return spark.createDataFrame(rows, SEEDS_SCHEMA)
+    return _local_df(spark, rows, SEEDS_SCHEMA)
 
 
 def robots_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return _local_df(spark, rows, ROBOTS_SCHEMA)

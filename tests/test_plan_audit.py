@@ -9,6 +9,8 @@ be visible in the plans Catalyst actually produces.
   through the parse join exactly once per round).
 - The uniform-priority politeness path must push the horizon below the
   robots broadcast join onto the frontier scan.
+- A round whose batch carries no params keeps the fetch URL on the
+  JVM: none of its fetch sources plans a Python stage.
 """
 
 from __future__ import annotations
@@ -138,8 +140,14 @@ def test_substring_dup_keyed_joins_only(spark, documents):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_metadata_twin_prunes_body_column(spark, tmp_path):
-    from silkworm_spark.operators.fetch import offline_fetch_resolved, resolve_web
+_PY_EVAL = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def _resolved_and_batch(spark, tmp_path, params_every: int = 0):
+    """A resolved web table and a 50-row fetch batch in frontier
+    layout; every ``params_every``-th row carries query params."""
+    from silkworm_spark.operators.fetch import resolve_web
+    from silkworm_spark.schemas import FRONTIER_SCHEMA
     from silkworm_spark.sources.webgen import build_web_df
 
     web = build_web_df(spark, 200, 5)
@@ -147,16 +155,20 @@ def test_metadata_twin_prunes_body_column(spark, tmp_path):
     resolve_web(web).write.parquet(rpath)
     resolved = spark.read.parquet(rpath)
 
-    from silkworm_spark.schemas import FRONTIER_SCHEMA
-
+    params = F.lit(None).cast("map<string,string>")
+    if params_every:
+        params = F.when(
+            F.xxhash64("url") % params_every == 0,
+            F.create_map(F.lit("q"), F.lit("1")),
+        ).otherwise(params)
     defaults = dict(
         url_hash=F.xxhash64("url"), host=F.lit("h.test"), depth=F.lit(0),
         parent_seq=F.lit(-1).cast("long"), child_index=F.lit(0),
         seq=F.lit(0).cast("long"), callback=F.lit("parse"),
         priority=F.lit(0), dont_filter=F.lit(False), retry_times=F.lit(0),
-        not_before=F.lit(0.0), round_added=F.lit(0),
+        not_before=F.lit(0.0), round_added=F.lit(0), params=params,
     )
-    batch = web.limit(50).select(
+    batch = web.orderBy("url").limit(50).select(
         F.col("url"),
         *[
             defaults.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
@@ -164,7 +176,36 @@ def test_metadata_twin_prunes_body_column(spark, tmp_path):
         ],
         F.lit(0).alias("part"),
     )
-    meta = offline_fetch_resolved(batch, resolved, n_batch=50, include_body=False)
+    return resolved, batch
+
+
+def _round_fetch_sources(batch, resolved, has_params):
+    """The offline round's three fetch sources over ONE fetch-ready
+    batch, as the engine builds them."""
+    from silkworm_spark.operators.fetch import (
+        offline_fetch_missing,
+        offline_fetch_resolved,
+        with_fetch_url,
+    )
+
+    fb = with_fetch_url(batch, has_params)
+    missing = offline_fetch_missing(fb, resolved)
+    return fb, {
+        "missing": missing,
+        "parse": offline_fetch_resolved(fb, resolved, n_batch=50, missing=missing),
+        "meta": offline_fetch_resolved(
+            fb, resolved, n_batch=50, include_body=False, missing=missing
+        ),
+    }
+
+
+def test_metadata_twin_prunes_body_column(spark, tmp_path):
+    from silkworm_spark.operators.fetch import offline_fetch_resolved, with_fetch_url
+
+    resolved, batch = _resolved_and_batch(spark, tmp_path)
+    meta = offline_fetch_resolved(
+        with_fetch_url(batch, False), resolved, n_batch=50, include_body=False
+    )
     plan = _plan(meta)
     # every scan of the resolved table must read a schema WITHOUT the
     # body binary — the metrics/retry twin never touches page bodies
@@ -172,6 +213,119 @@ def test_metadata_twin_prunes_body_column(spark, tmp_path):
         if "ReadSchema" in line and "resolved" not in line:
             assert "body:binary" not in line, line
     assert "body_len" in plan
+
+
+def test_params_free_fetch_sources_plan_no_python(spark, tmp_path):
+    """A batch without params keeps ``_fetch`` on the JVM: the parse
+    twin, the body-free metadata twin and the dead-link anti-join plan
+    no Python evaluation (an empty UDF branch would still start a
+    Python worker in every task)."""
+    resolved, batch = _resolved_and_batch(spark, tmp_path)
+    _fb, sources = _round_fetch_sources(batch, resolved, has_params=False)
+    for name, df in sources.items():
+        plan = _plan(df)
+        for node in _PY_EVAL:
+            assert node not in plan, (name, plan)
+    assert sources["parse"].count() == 50
+
+
+def test_params_batch_merges_params_at_fetch(spark, tmp_path):
+    from silkworm_spark.functions.urls import merge_params
+
+    resolved, batch = _resolved_and_batch(spark, tmp_path, params_every=3)
+    fb, sources = _round_fetch_sources(batch, resolved, has_params=True)
+    assert any(node in _plan(sources["parse"]) for node in _PY_EVAL)
+    rows = fb.select("url", "params", "_fetch").collect()
+    assert any(r["params"] for r in rows)
+    for r in rows:
+        assert r["_fetch"] == merge_params(r["url"], r["params"]), r
+
+
+@pytest.fixture(scope="module")
+def frontier_with_params(spark, tmp_path_factory):
+    """The ``frontier_parquet`` layout with params on two rows: one
+    inside a 100-row budget (seq 5), one far past it (seq 1500)."""
+    from silkworm_spark.schemas import FRONTIER_SCHEMA
+
+    path = str(tmp_path_factory.mktemp("frp") / "frontier")
+    rows = []
+    for seq in range(2000):
+        params = {"q": str(seq)} if seq in (5, 1500) else None
+        rows.append((
+            f"http://h{seq % 7}.test/p{seq}", seq, f"h{seq % 7}.test", 0,
+            -1, seq, seq, "parse", 0, False, 0, 0.0, 0,
+            None, None, params, None, None, None,
+        ))
+    spark.createDataFrame(rows, FRONTIER_SCHEMA).repartitionByRange(
+        8, "seq"
+    ).write.parquet(path)
+    return spark.read.schema(FRONTIER_SCHEMA).parquet(path)
+
+
+@pytest.mark.parametrize("no_politeness", [True, False])
+def test_dequeue_counts_params_rows(spark, frontier_parquet, frontier_with_params,
+                                    no_politeness):
+    """The dequeue's own aggregate says whether the batch may carry
+    params: 0 exactly when no batch row has them (the fetch then plans
+    no UDF), at least the true count otherwise."""
+    from silkworm_spark.operators.scheduler import dequeue_round
+    from silkworm_spark.plans.checkpoint import _empty_df
+    from silkworm_spark.schemas import HOST_STATE_SCHEMA, ROBOTS_SCHEMA
+
+    robots = (
+        _empty_df(spark, ROBOTS_SCHEMA) if no_politeness
+        else spark.createDataFrame([("h0.test", [], 500, None)], ROBOTS_SCHEMA)
+    )
+    for frontier, budget, want in (
+        (frontier_parquet, 100, 0),
+        (frontier_with_params, 100, 1),
+        (frontier_with_params, 2000, 2),
+    ):
+        dq = dequeue_round(
+            frontier, robots, _empty_df(spark, HOST_STATE_SCHEMA), vtime=0.0,
+            round_budget=budget, horizon=(0, 2000, 4),
+            no_politeness=no_politeness,
+        )
+        try:
+            in_batch = dq.batch.filter(F.size("params") > 0).count()
+            assert in_batch == want
+            assert (dq.n_params > 0) == (in_batch > 0)
+            assert dq.n_params >= in_batch
+        finally:
+            dq.release()
+
+
+def test_seed_tables_need_no_python(spark, tmp_path):
+    """Seed and robots frames are JVM-local tables, and canonicalizing
+    fast-pattern seeds plans no UDF branch: initialize() starts no
+    Python worker for them. A URL that misses the fast pattern still
+    brings the UDF branch in. (The canonicalization cases read parquet:
+    over a local table the optimizer folds an empty branch away.)"""
+    from silkworm_spark.functions.urls import with_canonical_url_host
+    from silkworm_spark.sources.webgen import (
+        build_robots,
+        build_seeds,
+        robots_df,
+        seeds_df,
+    )
+
+    def parquet(rows, name):
+        path = str(tmp_path / name)
+        seeds_df(spark, rows).write.parquet(path)
+        return spark.read.parquet(path)
+
+    seeds = build_seeds(8, 200, 5)
+    for df in (seeds_df(spark, seeds), robots_df(spark, build_robots(5)),
+               with_canonical_url_host(parquet(seeds, "fast"))):
+        plan = _plan(df)
+        assert "ExistingRDD" not in plan, plan
+        for node in _PY_EVAL:
+            assert node not in plan, plan
+    odd = parquet(seeds + [dict(url="HTTP://H.test/x", seq=99, priority=0)], "odd")
+    canon = with_canonical_url_host(odd)
+    assert any(node in _plan(canon) for node in _PY_EVAL)
+    got = {r["seq"]: r["url"] for r in canon.collect()}
+    assert got[99] == "http://h.test/x"
 
 
 def test_pagerank_keyed_shuffles_only(spark):

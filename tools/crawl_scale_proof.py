@@ -32,6 +32,7 @@ Prints one JSON line: per-leg walls + phase ticks + N->4N efficiency.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -168,8 +169,21 @@ def run_leg(cores: int, mult: int) -> dict:
         spark.stop()
 
 
-def main() -> None:
-    mult = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 10
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description="One crawl round at MULTIPLIER x the bench round, "
+        "at local[4] and local[16]."
+    )
+    ap.add_argument("multiplier", nargs="?", type=_positive_int, default=10,
+                    help="round size as a multiple of the bench round (default 10)")
+    mult = ap.parse_args(argv).multiplier
     t0 = perf_counter()
     fx = build_fixtures(mult)
     prep_s = round(perf_counter() - t0, 1)

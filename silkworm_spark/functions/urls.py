@@ -138,14 +138,9 @@ def with_canonical_url_host(df, url_col: str = "url"):
     UDFs re-deriving strings that were already canonical (guide §4:
     eliminate the Python boundary when a builtin expression exists).
     Row order is NOT preserved (split-filter + union); every consumer
-    orders by explicit keys.
-
-    The UDF branch is planned only when a probe finds a row that
-    misses the fast pattern: an empty UDF branch still starts a Python
-    worker in every task of every job that reads the result."""
+    orders by explicit keys."""
     u = F.col(url_col)
     is_fast = u.rlike(_CANON_FAST_SQL)
-    is_slow = ~F.coalesce(is_fast, F.lit(False))
     fast = (
         df.filter(is_fast)
         .withColumn(
@@ -154,10 +149,8 @@ def with_canonical_url_host(df, url_col: str = "url"):
         )
         .withColumn("host", F.regexp_extract(F.col(url_col), _HOST_EXTRACT_SQL, 1))
     )
-    if df.filter(is_slow).isEmpty():
-        return fast
     slow = (
-        df.filter(is_slow)
+        df.filter(~F.coalesce(is_fast, F.lit(False)))
         .withColumn(url_col, canonicalize_udf(url_col))
         .withColumn("host", host_udf(url_col))
     )

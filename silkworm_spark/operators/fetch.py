@@ -156,16 +156,17 @@ def offline_fetch_missing(batch: DataFrame, resolved: DataFrame) -> DataFrame:
 def offline_fetch_resolved(
     batch: DataFrame,
     resolved: DataFrame,
+    missing: DataFrame,
     n_batch: int | None = None,
     broadcast_max_rows: int = 2_000_000,
     include_body: bool = True,
-    missing: DataFrame | None = None,
 ) -> DataFrame:
     """Per-round fetch of the fetch-ready ``batch`` (``with_fetch_url``;
     the round builds it once and shares it with ``missing`` and both
     twins) against the precomputed resolution table: one equi-join,
     then the retryable-status rule
-    (status=200 once retry_times >= attempts_until_ok).
+    (status=200 once retry_times >= attempts_until_ok). ``missing`` is
+    ``offline_fetch_missing(batch, resolved)``, computed once per round.
 
     ``include_body=False`` builds the body-FREE metadata twin: the
     parquet scan column-prunes the binary away (``body_len`` stands in
@@ -218,14 +219,7 @@ def offline_fetch_resolved(
         F.col("r_error").alias("error"),
         null_hdrs,
     )
-    miss_src = (
-        missing if missing is not None
-        else batch.join(
-            resolved.select(F.col("url").alias("r_url")).hint("SHUFFLE_HASH"),
-            batch["_fetch"] == F.col("r_url"), "left_anti"
-        )
-    )
-    missing_rows = miss_src.select(
+    missing_rows = missing.select(
         *_CARRY,
         F.col("_fetch").alias("final_url"),
         F.lit(None).cast("int").alias("status"),

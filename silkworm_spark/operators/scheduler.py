@@ -88,8 +88,8 @@ class DequeueResult:
     n_denied: int = 0
     seq_bounds: tuple | None = None  # (min seq, max seq) of the batch
     floor_next: int = 0  # lower bound on the smallest live seq after this round
-    # upper bound on the batch rows with non-empty params (0 ⇒ none):
-    # lets the fetch keep `_fetch = url` on the JVM (fetch.with_fetch_url)
+    # batch rows with non-empty params: 0 lets the fetch keep
+    # `_fetch = url` on the JVM (fetch.with_fetch_url)
     n_params: int = 0
     _scored: DataFrame | None = None  # internal cache handle (unpersist after round)
 
@@ -104,6 +104,18 @@ def _params_flag(df: DataFrame):
     if "params" not in df.columns:
         return F.lit(0)
     return has_params_col().cast("int")
+
+
+def _budget_cut(sel: DataFrame, round_budget: int) -> tuple[int, int]:
+    """(k-th smallest selected seq, params rows among those k): one
+    narrow TakeOrdered job over the selection."""
+    r = (
+        sel.select("seq", _params_flag(sel).alias("_p")).orderBy("seq")
+        .limit(round_budget)
+        .agg(F.max("seq").alias("kth"), F.sum("_p").alias("np"))
+        .first()
+    )
+    return int(r["kth"]), int(r["np"] or 0)
 
 
 def _dequeue_fifo(
@@ -299,7 +311,7 @@ def dequeue_round(
         if h_cap >= seq_next:
             h_cap = None  # horizon already covers everything
 
-    kth: int | None = None
+    cut: tuple[int, int] | None = None  # (kth, n_params) of the budget cut
     while True:
         scored = build(h_cap).cache()
         st = scored.agg(
@@ -308,7 +320,7 @@ def dequeue_round(
             F.min(F.when(F.col("_sel"), F.col("seq"))).alias("mn"),
             F.max(F.when(F.col("_sel"), F.col("seq"))).alias("mx"),
             F.min(F.when(~F.col("_denied") & ~F.col("_sel"), F.col("seq"))).alias("floor_cand"),
-            # over the selection BEFORE the budget cut: an upper bound
+            # exact unless the budget cut below drops selected rows
             F.sum(F.when(F.col("_sel"), _params_flag(scored))).alias("np"),
         ).first()
         n_denied = int(st["nd"] or 0)
@@ -329,29 +341,21 @@ def dequeue_round(
         # mixed-priority audit: exempt ruled rows may carry seq ≥ H into
         # the selection; if the budget cut reaches H, unruled rows just
         # past the horizon would have displaced batch rows — widen
-        kth = (
-            scored.filter(F.col("_sel"))
-            .select("seq").orderBy("seq").limit(round_budget)
-            .agg(F.max("seq")).first()[0]
-        ) if n_sel > round_budget else int(st["mx"])
-        if kth < h_cap:
+        if n_sel > round_budget:
+            cut = _budget_cut(scored.filter(F.col("_sel")), round_budget)
+        if (cut[0] if cut else int(st["mx"])) < h_cap:
             break
-        kth = None
+        cut = None
         scored.unpersist()
         h_cap = floor + (h_cap - floor) * 2
         if h_cap >= seq_next:
             h_cap = None
 
     seq_min, seq_max, floor_cand = st["mn"], st["mx"], st["floor_cand"]
-    n_batch = n_sel
+    n_batch, n_params = n_sel, int(st["np"] or 0)
     batch = scored.filter(F.col("_sel"))
     if n_sel > round_budget:
-        # k-th smallest selected seq: narrow single-column TakeOrdered
-        if kth is None:
-            kth = (
-                batch.select("seq").orderBy("seq").limit(round_budget)
-                .agg(F.max("seq")).first()[0]
-            )
+        kth, n_params = cut or _budget_cut(batch, round_budget)
         batch = batch.filter(F.col("seq") <= kth)
         n_batch, seq_max = round_budget, kth
         floor_cand = min(x for x in (floor_cand, kth + 1) if x is not None)
@@ -414,6 +418,6 @@ def dequeue_round(
         n_denied=n_denied,
         seq_bounds=(int(seq_min), int(seq_max)) if n_batch else None,
         floor_next=floor_next,
-        n_params=int(st["np"] or 0),
+        n_params=n_params,
         _scored=scored,
     )

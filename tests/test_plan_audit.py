@@ -200,13 +200,9 @@ def _round_fetch_sources(batch, resolved, has_params):
 
 
 def test_metadata_twin_prunes_body_column(spark, tmp_path):
-    from silkworm_spark.operators.fetch import offline_fetch_resolved, with_fetch_url
-
     resolved, batch = _resolved_and_batch(spark, tmp_path)
-    meta = offline_fetch_resolved(
-        with_fetch_url(batch, False), resolved, n_batch=50, include_body=False
-    )
-    plan = _plan(meta)
+    _fb, sources = _round_fetch_sources(batch, resolved, has_params=False)
+    plan = _plan(sources["meta"])
     # every scan of the resolved table must read a schema WITHOUT the
     # body binary — the metrics/retry twin never touches page bodies
     for line in plan.splitlines():
@@ -262,12 +258,14 @@ def frontier_with_params(spark, tmp_path_factory):
     return spark.read.schema(FRONTIER_SCHEMA).parquet(path)
 
 
+@pytest.mark.parametrize("horizon", [(0, 2000, 4), None])
 @pytest.mark.parametrize("no_politeness", [True, False])
 def test_dequeue_counts_params_rows(spark, frontier_parquet, frontier_with_params,
-                                    no_politeness):
-    """The dequeue's own aggregate says whether the batch may carry
-    params: 0 exactly when no batch row has them (the fetch then plans
-    no UDF), at least the true count otherwise."""
+                                    no_politeness, horizon):
+    """The dequeue's own aggregates count the batch rows that carry
+    params (0 lets the fetch plan no UDF). Without a horizon the
+    selection reaches the params row at seq 1500, which the 100-row
+    budget cut then drops: it must not be counted."""
     from silkworm_spark.operators.scheduler import dequeue_round
     from silkworm_spark.plans.checkpoint import _empty_df
     from silkworm_spark.schemas import HOST_STATE_SCHEMA, ROBOTS_SCHEMA
@@ -283,24 +281,24 @@ def test_dequeue_counts_params_rows(spark, frontier_parquet, frontier_with_param
     ):
         dq = dequeue_round(
             frontier, robots, _empty_df(spark, HOST_STATE_SCHEMA), vtime=0.0,
-            round_budget=budget, horizon=(0, 2000, 4),
+            round_budget=budget, horizon=horizon,
             no_politeness=no_politeness,
         )
         try:
             in_batch = dq.batch.filter(F.size("params") > 0).count()
             assert in_batch == want
-            assert (dq.n_params > 0) == (in_batch > 0)
-            assert dq.n_params >= in_batch
+            assert dq.n_params == in_batch
         finally:
             dq.release()
 
 
-def test_seed_tables_need_no_python(spark, tmp_path):
-    """Seed and robots frames are JVM-local tables, and canonicalizing
-    fast-pattern seeds plans no UDF branch: initialize() starts no
-    Python worker for them. A URL that misses the fast pattern still
-    brings the UDF branch in. (The canonicalization cases read parquet:
-    over a local table the optimizer folds an empty branch away.)"""
+def test_seed_tables_need_no_python(spark):
+    """Seed and robots frames are JVM-local tables (shipped once as
+    Arrow, not a Python RDD that every job re-runs), so canonicalizing
+    fast-pattern seeds plans no UDF either: the optimizer filters the
+    local rows and drops the empty slow branch. initialize() then
+    starts no Python worker for them. A URL that misses the fast
+    pattern still brings the UDF branch in."""
     from silkworm_spark.functions.urls import with_canonical_url_host
     from silkworm_spark.sources.webgen import (
         build_robots,
@@ -309,20 +307,15 @@ def test_seed_tables_need_no_python(spark, tmp_path):
         seeds_df,
     )
 
-    def parquet(rows, name):
-        path = str(tmp_path / name)
-        seeds_df(spark, rows).write.parquet(path)
-        return spark.read.parquet(path)
-
     seeds = build_seeds(8, 200, 5)
     for df in (seeds_df(spark, seeds), robots_df(spark, build_robots(5)),
-               with_canonical_url_host(parquet(seeds, "fast"))):
+               with_canonical_url_host(seeds_df(spark, seeds))):
         plan = _plan(df)
         assert "ExistingRDD" not in plan, plan
         for node in _PY_EVAL:
             assert node not in plan, plan
-    odd = parquet(seeds + [dict(url="HTTP://H.test/x", seq=99, priority=0)], "odd")
-    canon = with_canonical_url_host(odd)
+    odd = seeds + [dict(url="HTTP://H.test/x", seq=99, priority=0)]
+    canon = with_canonical_url_host(seeds_df(spark, odd))
     assert any(node in _plan(canon) for node in _PY_EVAL)
     got = {r["seq"]: r["url"] for r in canon.collect()}
     assert got[99] == "http://h.test/x"
